@@ -191,9 +191,9 @@ object Dedup {
 
   /** [[jaccardPairsPrefix]]'s pipeline with its intermediate stages
     * exposed — (shingle sets, prefix index rows, raw bucket pairs,
-    * distinct candidates) — so the scale probe (`tools/ProbeJaccard`)
-    * can decompose candidate VOLUME from shuffle constants. The
-    * production method composes exactly these frames (plan unchanged).
+    * distinct candidates) — so a scale probe can decompose candidate
+    * VOLUME from shuffle constants. The production method composes
+    * exactly these frames (plan unchanged).
     */
   private[graft] def jaccardPrefixStages(docs: DataFrame, idCol: String,
       textCol: String, k: Int, tauNum: Long, tauDen: Long)

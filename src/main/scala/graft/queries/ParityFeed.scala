@@ -29,6 +29,13 @@ import org.apache.spark.sql.types.StructType
   * Event-time timers still fire through far-future sentinel ROWS, now
   * appended as one-row parquet slices ([[sentinel]]): a new file is a
   * new micro-batch, exactly like a drop-dir tail in production.
+  *
+  * Gates consume a feed through [[ParityGate]], which owns the memory
+  * sink: drain the query (the staged data batch), run the gate's flush
+  * (its far-future sentinel append, one more micro-batch), drain
+  * again, stop, fail if any row was dropped at the watermark, read the
+  * sink table — and drop the sink's temp view on every path, failing
+  * ones included.
   */
 private[graft] object ParityFeed {
 
@@ -98,11 +105,17 @@ private[graft] object ParityFeed {
   private val shared =
     scala.collection.mutable.HashMap.empty[String, (FileFeed, Long)]
 
+  /** Shared dirs currently inside a [[withSharedFeed]] bracket → the
+    * sentinel files [[sentinelRows]] wrote into each during it. Guarded
+    * by `shared`'s lock. */
+  private val open = scala.collection.mutable.HashMap
+    .empty[String, scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]]
+
   def withSharedFeed[A](s: SparkSession, cacheKey: String, df: => DataFrame,
       tsCol: String = "tsMicros", slices: Int = 8)(
       f: (FileFeed, Long) => A): A = {
     val (feed, maxTs) = shared.synchronized {
-      shared.getOrElseUpdate(cacheKey, {
+      val entry = shared.getOrElseUpdate(cacheKey, {
         val dir = Files.createTempDirectory(feedBase(), "shared")
         val d = df
         d.repartition(slices).write.mode("overwrite").parquet(dir.toString)
@@ -117,40 +130,38 @@ private[graft] object ParityFeed {
         }))
         (feed, mx)
       })
+      // one bracket per shared dir at a time: a nested or concurrent
+      // second bracket would delete the first one's live sentinels
+      if (open.contains(entry._1.dir))
+        throw new IllegalStateException(s"shared feed '$cacheKey' is " +
+          "already in use by an enclosing or concurrent withSharedFeed")
+      open(entry._1.dir) = scala.collection.mutable.ArrayBuffer.empty
+      entry
     }
-    // r18: delete the files ADDED during `f` (the gate's own sentinel
-    // slices) once its streams are stopped — on a JVM-lived shared dir
-    // every stale one-row slice costs each LATER gate a scan task plus
-    // listing/seen-log bookkeeping in its data batch, which at ~2
-    // appends per gate per run outgrows the staging cost the sharing
-    // saves. Safe because the graded harnesses run queries
-    // sequentially (no stream is live on the feed when `f` returns);
-    // the stale-sentinel absorption contract above stays in force as
-    // the defense for any leftover slice.
-    val dirFile = new File(feed.dir)
-    val before = Option(dirFile.list()).map(_.toSet).getOrElse(Set.empty[String])
+    // r18: delete the gate's own sentinel slices once its streams are
+    // stopped — on a JVM-lived shared dir every stale one-row slice
+    // costs each LATER gate a scan task plus listing/seen-log
+    // bookkeeping in its data batch, which at ~2 appends per gate per
+    // run outgrows the staging cost the sharing saves. Only the files
+    // this bracket's sentinels created are deleted (through the same
+    // Hadoop FileSystem, so each `.crc` sidecar goes with its file),
+    // and a failed delete is loud. The stale-sentinel absorption
+    // contract above stays in force for any slice written outside a
+    // bracket.
     try f(feed, maxTs) finally {
-      var deleted = false
-      Option(dirFile.listFiles()).foreach(_.foreach { x =>
-        if (!before.contains(x.getName)) { x.delete(); deleted = true }
-      })
+      val own = shared.synchronized(open.remove(feed.dir)).get
+      val fs = new org.apache.hadoop.fs.Path(feed.dir)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val failed = own.filterNot(p => fs.delete(p, false))
       // the replay path is a batch read whose file listing rides the
       // session FileStatusCache — drop the stale entries so a LATER
       // gate's replay of this dir cannot list the files just deleted
-      if (deleted) s.catalog.refreshByPath(feed.dir)
+      if (own.nonEmpty) s.catalog.refreshByPath(feed.dir)
+      if (failed.nonEmpty)
+        throw new java.io.IOException(s"shared feed '$cacheKey': could " +
+          s"not delete sentinel slices ${failed.mkString(", ")}")
     }
   }
-
-  /** [[withFeed]] with every row staged TWICE — the exactly-once dedup
-    * gate's duplicated feed, the same multiset `df.union(df)` would
-    * produce. One staged write; the copies interleave per slice, which
-    * the dedup gate's operators are insensitive to (all data lands in
-    * one micro-batch, `dropDuplicatesWithinWatermark` keys on the id,
-    * and the window counts are order-free). */
-  def withFeedDoubled[A](s: SparkSession, df: DataFrame,
-      tsCol: String = "tsMicros", slices: Int = 8)(
-      f: (FileFeed, Long) => A): A =
-    withFeed(s, df.unionAll(df), tsCol, slices)(f)
 
   /** The streaming face of a staged feed. All staged slices are
     * already present, so the first trigger reads them as ONE
@@ -183,7 +194,15 @@ private[graft] object ParityFeed {
     * string), and the file-stream source reads parquet columns by
     * name, so interop with the Spark-staged slices is the ordinary
     * parquet contract. A fresh UUID filename makes each append its
-    * own micro-batch exactly like the old one-file append job. */
+    * own micro-batch exactly like the old one-file append job.
+    *
+    * The slice is written under a dot-prefixed name, which the file
+    * source's listing skips, and renamed to its final name only after
+    * `close()` has written the footer — a trigger polling the live
+    * feed never lists a half-written file. The rename goes through
+    * the writer's own Hadoop FileSystem, so the `.crc` sidecar moves
+    * with the file. Inside a [[withSharedFeed]] bracket the final path
+    * is recorded for that bracket's cleanup. */
   def sentinelRows(s: SparkSession, feed: FileFeed,
       rows: Seq[Seq[Any]]): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroup
@@ -206,10 +225,12 @@ private[graft] object ParityFeed {
       }
     }
     val schema = b.named("spark_schema")
-    val path = new org.apache.hadoop.fs.Path(
-      feed.dir, s"sentinel-${java.util.UUID.randomUUID()}.parquet")
-    val w = ExampleParquetWriter.builder(path)
-      .withConf(s.sparkContext.hadoopConfiguration)
+    val name = s"sentinel-${java.util.UUID.randomUUID()}.parquet"
+    val hidden = new org.apache.hadoop.fs.Path(feed.dir, s".$name")
+    val path = new org.apache.hadoop.fs.Path(feed.dir, name)
+    val conf = s.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(hidden)
+      .withConf(conf)
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
       .build()
@@ -228,24 +249,11 @@ private[graft] object ParityFeed {
       }
       w.write(g)
     } finally w.close()
+    if (!hidden.getFileSystem(conf).rename(hidden, path))
+      throw new java.io.IOException(s"could not publish sentinel slice $path")
+    shared.synchronized(open.get(feed.dir).foreach(_ += path))
   }
 
-  /** Runs `f` with `spark.sql.shuffle.partitions` lowered to `n` and
-    * no-data micro-batches disabled, restoring both after. The parity
-    * micro-batches carry sf-scale row counts through ONE stateful
-    * operator; at the session default (32+) every micro-batch pays
-    * per-partition state-store open/commit/checkpoint on mostly-empty
-    * partitions — measurable fixed cost, no parallelism gain. Results
-    * are partition-count independent (the hash gate runs these
-    * queries at 32 and 256). No-data batches exist to fire event-time
-    * timers WITHOUT new input; every parity query instead fires its
-    * timers with explicit far-future sentinel rows, so the automatic
-    * extra batch after each data batch is pure overhead (~0.6 s/query
-    * measured, ProbeStream) and the final table is identical either
-    * way — the timers fire in the sentinel's own data batch at the
-    * latest. Safe because a streaming query fixes both settings from
-    * the conf AT START, inside this scope; batch queries planned
-    * after restore are untouched. */
   /** The streaming folds order tied events by (ts, activity) while
     * the batch oracles tie-break on event_id — parity therefore rests
     * on the dataset's unique-(case, ts) contract (stated in
@@ -265,6 +273,22 @@ private[graft] object ParityFeed {
         "batch event_id tie-break are no longer interchangeable")
   }
 
+  /** Runs `f` with `spark.sql.shuffle.partitions` lowered to `n` and
+    * no-data micro-batches disabled, restoring both after. The parity
+    * micro-batches carry sf-scale row counts through ONE stateful
+    * operator; at the session default (32+) every micro-batch pays
+    * per-partition state-store open/commit/checkpoint on mostly-empty
+    * partitions — measurable fixed cost, no parallelism gain. Results
+    * are partition-count independent (the hash gate runs these
+    * queries at 32 and 256). No-data batches exist to fire event-time
+    * timers WITHOUT new input; every parity query instead fires its
+    * timers with explicit far-future sentinel rows, so the automatic
+    * extra batch after each data batch is pure overhead (~0.6 s/query
+    * measured) and the final table is identical either way — the
+    * timers fire in the sentinel's own data batch at the latest. Safe
+    * because a streaming query fixes both settings from the conf AT
+    * START, inside this scope; batch queries planned after restore
+    * are untouched. */
   def withStreamParallelism[A](s: SparkSession, n: Int)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -275,8 +299,7 @@ private[graft] object ParityFeed {
     // Checkpoint on tmpfs when available: the parity queries commit
     // offsets + state deltas for exactly 2-4 micro-batches and the
     // dirs are deleted right here, so disk durability buys nothing —
-    // ~0.1 s/query of fsync/IO measured (ProbeStream /tmp vs
-    // /dev/shm). Fresh UUID base per invocation ⇒ a rerun can never
+    // ~0.1 s/query of fsync/IO measured (/tmp vs /dev/shm). Fresh UUID base per invocation ⇒ a rerun can never
     // resume a previous run's state.
     val ckDir: Option[java.nio.file.Path] =
       try {

@@ -19,8 +19,6 @@ import graft.Tables
   */
 object RelationalQueries {
 
-  private val winsRun = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def dec(c: String) = col(c).cast("decimal(18,2)")
 
   /** Final-result decimal → double. The exact decimal sum is computed
@@ -95,9 +93,8 @@ object RelationalQueries {
     // integer→double casts, and IEEE tree bit-for-bit, so the gate
     // shares q_winsorized_stats's clip-and-sum oracle verbatim.
     "q_stream_winsorized_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingWinsorized
       val Ignore = "\u0000ignore"
       val loP = 10; val hiP = 990
@@ -123,22 +120,13 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
-      val name = s"stream_wins_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingWinsorized.histogram(s, items, width = W,
-          gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded: ≤ groups · value-range/width rows (≈ 6 · 5100 here)
-      val hist = s.table(name).as[StreamingWinsorized.BucketCount]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
+      val hist = gate.sink("wins_parity", StreamingWinsorized.histogram(s,
+            items, width = W, gapSeconds = 3600L, ignoreGroup = Ignore),
+          flush = Some(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.as[StreamingWinsorized.BucketCount].collect().toSeq
+      }
       val bands = StreamingWinsorized.bandBuckets(hist, loP, hiP)
       // ---- pass 2: exact band refinement, ONE bounded batch job over
       // the retained drop-dir (sentinel slices excluded by their
@@ -175,9 +163,8 @@ object RelationalQueries {
     // batch kernel's integer contract, so the gate shares
     // q_exact_quantiles's row_number oracle verbatim.
     "q_stream_quantiles_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.{StreamingQuantiles, StreamingWinsorized}
       val Ignore = "\u0000ignore"
       val ps = Seq(250, 500, 750, 900, 990)
@@ -200,22 +187,13 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
-      val name = s"stream_quant_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingWinsorized.histogram(s, items, width = W,
-          gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded: ≤ groups · value-range/width rows
-      val hist = s.table(name).as[StreamingWinsorized.BucketCount]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
+      val hist = gate.sink("quant_parity", StreamingWinsorized.histogram(s,
+            items, width = W, gapSeconds = 3600L, ignoreGroup = Ignore),
+          flush = Some(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.as[StreamingWinsorized.BucketCount].collect().toSeq
+      }
       // ---- pass 2: per-value counts in the rank buckets, ONE bounded
       // batch job over the retained drop-dir ----
       val res = new StreamingQuantiles.RankResolver(s, hist, ps, W, Ignore)
@@ -240,9 +218,8 @@ object RelationalQueries {
     // enforced replay-faithfulness guard; the gate shares
     // q_outlier_flags's oracle VERBATIM.
     "q_stream_outliers_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.{StreamingQuantiles, StreamingWinsorized}
       val Ignore = "\u0000ignore"
       val W = 2048L // tuning only: sizes state + join volume, never the answer
@@ -262,21 +239,12 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
-      val name = s"stream_outliers_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingWinsorized.histogram(s, items, width = W,
-          gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val hist = s.table(name).as[StreamingWinsorized.BucketCount]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
+      val hist = gate.sink("outliers_parity", StreamingWinsorized.histogram(s,
+            items, width = W, gapSeconds = 3600L, ignoreGroup = Ignore),
+          flush = Some(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.as[StreamingWinsorized.BucketCount].collect().toSeq
+      }
       val res = new StreamingQuantiles.RankResolver(s, hist, Seq(990), W,
         Ignore)
       res.addBatch(ParityFeed.replay(s, feed)
@@ -364,9 +332,8 @@ object RelationalQueries {
     // operator); the hashed columns (n, bound, rank_ok) are
     // deterministic and shared with q_quantiles_sketch's oracle.
     "q_stream_quantiles_sketch_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.ops.SketchQuantiles
       import graft.streaming.{StreamingSketchQuantiles, StreamingWinsorized}
       val Ignore = "\u0000ignore"
@@ -385,25 +352,17 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingWinsorized.VItem]
-      val name = s"stream_sketchq_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingSketchQuantiles.quantiles(s, items, k = K,
-          psPermille = ps, gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded: |groups| · |ps| rows (the flushed estimates)
-      val est = s.table(name)
-        .select(col("group"), col("pPermille").as("p_permille"),
+      val est = gate.sink("sketchq_parity", StreamingSketchQuantiles.quantiles(
+            s, items, k = K, psPermille = ps, gapSeconds = 3600L,
+            ignoreGroup = Ignore),
+          flush = Some(() => ParityFeed.sentinel(s, feed, Ignore, 0L,
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.select(col("group"), col("pPermille").as("p_permille"),
           col("valueEst").as("value_est"), col("nTotal").as("n_total"),
           col("errBoundRank").as("err_bound_rank"))
-        .collect().toSeq
-      s.catalog.dropTempView(name)
+          .collect().toSeq
+      }
       val estDf = s.createDataFrame(
         java.util.Arrays.asList(est: _*),
         org.apache.spark.sql.types.StructType(Seq(
@@ -430,8 +389,7 @@ object RelationalQueries {
           substring_index(col("group"), "|", -1).as("l_linestatus"),
           col("p_permille"), col("n_total"), col("err_bound_rank"),
           col("rank_ok"))
-      val auditRows = audit.collect() // |groups| · |ps| rows, bounded
-      s.createDataFrame(java.util.Arrays.asList(auditRows: _*), audit.schema)
+      ParityGate.local(s, audit) // |groups| · |ps| rows, bounded
       }
       }
     },
@@ -448,9 +406,8 @@ object RelationalQueries {
     // exact WEIGHTED ranks (rankAuditWeighted — the audit, not the
     // operator); shares q_quantiles_sketch_weighted's oracle verbatim.
     "q_stream_quantiles_sketch_weighted_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.ops.SketchQuantiles
       import graft.streaming.StreamingSketchQuantiles
       val Ignore = "\u0000ignore"
@@ -471,25 +428,17 @@ object RelationalQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSketchQuantiles.WItem]
-      val name = s"stream_sketchqw_parity_${winsRun.incrementAndGet()}"
-      val q = StreamingSketchQuantiles.quantilesWeighted(s, items, k = K,
-          psPermille = ps, gapSeconds = 3600L, ignoreGroup = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, Ignore, 0L, 1L,
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded: |groups| · |ps| rows (the flushed estimates)
-      val est = s.table(name)
-        .select(col("group"), col("pPermille").as("p_permille"),
+      val est = gate.sink("sketchqw_parity",
+          StreamingSketchQuantiles.quantilesWeighted(s, items, k = K,
+            psPermille = ps, gapSeconds = 3600L, ignoreGroup = Ignore),
+          flush = Some(() => ParityFeed.sentinel(s, feed, Ignore, 0L, 1L,
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.select(col("group"), col("pPermille").as("p_permille"),
           col("valueEst").as("value_est"), col("nTotal").as("n_total"),
           col("errBoundRank").as("err_bound_rank"))
-        .collect().toSeq
-      s.catalog.dropTempView(name)
+          .collect().toSeq
+      }
       val estDf = s.createDataFrame(
         java.util.Arrays.asList(est: _*),
         org.apache.spark.sql.types.StructType(Seq(
@@ -514,8 +463,7 @@ object RelationalQueries {
           substring_index(col("group"), "|", -1).as("l_linestatus"),
           col("p_permille"), col("n_total"), col("err_bound_rank"),
           col("rank_ok"))
-      val auditRows = audit.collect() // |groups| · |ps| rows, bounded
-      s.createDataFrame(java.util.Arrays.asList(auditRows: _*), audit.schema)
+      ParityGate.local(s, audit) // |groups| · |ps| rows, bounded
       }
       }
     },

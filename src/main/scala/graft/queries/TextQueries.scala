@@ -25,10 +25,6 @@ object TextQueries {
   /** q_text_bm25 query terms: one rare marker + three common terms. */
   private[queries] val Bm25Terms = Seq("dup", "spark", "hash", "key")
 
-  /** Unique memory-sink names across Verify's repeated invocations. */
-  private val hhRun = new java.util.concurrent.atomic.AtomicInteger
-  private val sampleRun = new java.util.concurrent.atomic.AtomicInteger
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // BM25-style ranked retrieval in exact integer arithmetic (no
     // logarithms — dyadic-rational idf and cleared-denominator tf
@@ -127,9 +123,8 @@ object TextQueries {
     // count over the retained staged files. Shares q_token_cm_est's
     // oracle VERBATIM.
     "q_stream_cm_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.text.CmSketch
       import graft.streaming.StreamingSketches
       val d = 4; val w = 64; val seed = 42L
@@ -155,22 +150,13 @@ object TextQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSketches.CItem]
-      val name = s"stream_cm_parity_${hhRun.incrementAndGet()}"
-      val q = StreamingSketches.cmCells(s, items, w = w,
-          gapSeconds = 3600L)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "zz_ignore", "s",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded: ≤ d·w cell rows
-      val cellRows = s.table(name)
-        .select(col("row"), col("bucket"), col("n")).collect()
-      s.catalog.dropTempView(name)
+      val cellRows = gate.sink("cm_parity",
+          StreamingSketches.cmCells(s, items, w = w, gapSeconds = 3600L),
+          flush = Some(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s",
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.select(col("row"), col("bucket"), col("n")).collect()
+      }
       val cells = s.createDataFrame(
         java.util.Arrays.asList(cellRows: _*),
         org.apache.spark.sql.types.StructType(Seq(
@@ -192,8 +178,7 @@ object TextQueries {
         .join(exact, Seq("token"), "left")
         .select(col("token"), col("est_n"),
           coalesce(col("true_n"), lit(0L)).as("true_n"))
-      val resRows = res.collect() // |probes| rows, bounded
-      s.createDataFrame(java.util.Arrays.asList(resRows: _*), res.schema)
+      ParityGate.local(s, res) // |probes| rows, bounded
       }
       }
     },
@@ -324,9 +309,8 @@ object TextQueries {
     // q_token_heavy_hitters; the oracle is the identical vocabulary
     // GROUP BY … HAVING.
     "q_stream_heavy_hitters_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingHeavyHitters
       val Ignore = "\u0000"
       val ppm = 75
@@ -357,22 +341,14 @@ object TextQueries {
       // watermark itself, downstream of its map-side pre-combine
       val items = shingleStream(ParityFeed.stream(s, feed))
         .as[StreamingHeavyHitters.Item]
-      val name = s"stream_hh_parity_${hhRun.incrementAndGet()}"
-      val q = StreamingHeavyHitters.candidates(s, items, k = 1 << 14,
-          nBuckets = 8, ppm = ppm, gapSeconds = 3600L, ignoreItem = Ignore)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded by the post-prune candidate set (≈ heavy set + border)
-      val cands = s.table(name).select(col("item")).distinct()
-        .as[String].collect()
-      s.catalog.dropTempView(name)
+      val cands = gate.sink("hh_parity", StreamingHeavyHitters.candidates(s,
+            items, k = 1 << 14, nBuckets = 8, ppm = ppm, gapSeconds = 3600L,
+            ignoreItem = Ignore),
+          flush = Some(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.select(col("item")).distinct().as[String].collect()
+      }
       // ---- pass 2: exact recount, ONE bounded batch job over the
       // retained drop-dir (sentinel slices excluded by their
       // far-future ts) ----
@@ -431,9 +407,8 @@ object TextQueries {
     // columns are deterministic and shared with q_token_hh_sketch's
     // oracle VERBATIM.
     "q_stream_hh_sketch_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingHeavyHitters
       val Ignore = "\u0000"
       val ppm = 75; val k = 1 << 14
@@ -450,29 +425,21 @@ object TextQueries {
         .select(when(col("tsMicros") > lit(maxTs), lit(Ignore))
           .otherwise(col("gram")).as("item"), col("tsMicros"))
         .as[StreamingHeavyHitters.Item]
-      val name = s"stream_hh_sketch_${hhRun.incrementAndGet()}"
       // emitBucketCounts (r17): each flush carries one null-item row
       // with the bucket's exact folded weight — their sum is the
       // exact stream length, so the audit below no longer re-counts
       // the retained files (the recount re-paid the tokenize+explode;
       // a wrong N cannot pass silently — n_total is oracle-hashed)
-      val q = StreamingHeavyHitters.candidates(s, items, k = k,
+      val cands = StreamingHeavyHitters.candidates(s, items, k = k,
           nBuckets = 8, ppm = ppm, gapSeconds = 3600L, ignoreItem = Ignore,
           emitBucketCounts = true)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded: the post-prune candidate superset (≈ heavy + border)
       // plus one exact-count row per flush epoch
-      val allRows = s.table(name)
-        .select(col("item"), col("wLower").as("w_lower")).collect()
-      s.catalog.dropTempView(name)
+      val allRows = gate.sink("hh_sketch", cands,
+          flush = Some(() => ParityFeed.sentinel(s, feed, "zz_ignore", "s s s",
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.select(col("item"), col("wLower").as("w_lower")).collect()
+      }
       val n = allRows.filter(_.isNullAt(0)).map(_.getLong(1)).sum
       val candRows = allRows.filter(!_.isNullAt(0))
       val estDf = s.createDataFrame(
@@ -495,8 +462,7 @@ object TextQueries {
       val audit = graft.text.HeavyHitters
         .mgAudit(sh, col("gram"), estDf, ppm, k, Some(n))
         .withColumnRenamed("item", "gram")
-      val auditRows = audit.collect() // ≤ |true heavy| rows, bounded
-      s.createDataFrame(java.util.Arrays.asList(auditRows: _*), audit.schema)
+      ParityGate.local(s, audit) // ≤ |true heavy| rows, bounded
       }
       }
     },
@@ -536,9 +502,8 @@ object TextQueries {
     // sketch: every output bit matches the batch kernel, so the gate
     // shares q_sample_weighted's oracle verbatim.
     "q_stream_sample_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingSample
       val IgnoreId = Long.MinValue
       // r18: ONE shared (group, id, weight, ts) documents feed serves
@@ -559,21 +524,14 @@ object TextQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSample.Item]
-      val name = s"stream_sample_parity_${sampleRun.incrementAndGet()}"
-      val q = StreamingSample.topK(s, items, k = 100, seed = 11L,
-          nBuckets = 8, gapSeconds = 3600L, ignoreId = IgnoreId)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "", 0L, 1L, maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded: ≤ nBuckets·k flushed rows
-      val flushed = s.table(name).as[StreamingSample.BucketTop]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
+      val flushed = gate.sink("sample_parity", StreamingSample.topK(s, items,
+            k = 100, seed = 11L, nBuckets = 8, gapSeconds = 3600L,
+            ignoreId = IgnoreId),
+          flush = Some(() => ParityFeed.sentinel(s, feed, "", 0L, 1L,
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.as[StreamingSample.BucketTop].collect().toSeq
+      }
       StreamingSample.merge(flushed, k = 100)
         .toDF().select(col("id").as("doc_id"), col("weight").as("n_chars"),
           col("priority"))
@@ -588,9 +546,8 @@ object TextQueries {
     // lang — exactly the batch kernel's per-group row_number, so the
     // gate shares q_sample_stratified_weighted's oracle verbatim.
     "q_stream_stratified_sample_parity" -> { (s, dir) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
       import graft.streaming.StreamingSample
       val IgnoreId = Long.MinValue
       // r18: the shared docsample feed (see q_stream_sample_parity)
@@ -610,21 +567,14 @@ object TextQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[StreamingSample.GItem]
-      val name = s"stream_strat_sample_${sampleRun.incrementAndGet()}"
-      val q = StreamingSample.topKByGroup(s, items, k = 20, seed = 11L,
-          nBuckets = 8, gapSeconds = 3600L, ignoreId = IgnoreId)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "", 0L, 1L, maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
       // bounded: ≤ |langs|·nBuckets·k flushed rows
-      val flushed = s.table(name).as[StreamingSample.GroupBucketTop]
-        .collect().toSeq
-      s.catalog.dropTempView(name)
+      val flushed = gate.sink("strat_sample", StreamingSample.topKByGroup(s,
+            items, k = 20, seed = 11L, nBuckets = 8, gapSeconds = 3600L,
+            ignoreId = IgnoreId),
+          flush = Some(() => ParityFeed.sentinel(s, feed, "", 0L, 1L,
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.as[StreamingSample.GroupBucketTop].collect().toSeq
+      }
       StreamingSample.mergeByGroup(flushed, k = 20)
         .toDF().select(col("group").as("lang"), col("id").as("doc_id"),
           col("weight").as("n_chars"), col("priority"), col("rk"))

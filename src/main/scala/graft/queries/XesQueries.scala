@@ -1,10 +1,7 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.{StreamingDfg, TraceAssembly}
 import graft.xes.{XesReader, XesWriter}
@@ -99,7 +96,7 @@ object XesQueries {
     // streaming DFG edges, aggregated after completion; the oracle
     // derives the same edge multiset from the batch events fixture.
     "q_stream_dfg_parity" -> { (s, _) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
       val src = XesReader.readEvents(s, s"$book/*.xes").toDF()
         .filter(col("traceIdx").isNotNull && col("activity").isNotNull &&
@@ -119,27 +116,13 @@ object XesQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[TraceAssembly.InEvent]
-      val name = s"stream_dfg_parity_${parityRun.incrementAndGet()}"
-      val q = StreamingDfg.edges(s, events, gapSeconds = 60)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "_sentinel", "y",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      // materialize (bounded: one row per distinct activity pair),
-      // then drop the per-invocation memory-sink view so repeated
-      // runs don't accumulate sink tables in driver memory
-      val res = s.table(name)
-        .groupBy(col("actFrom").as("act_from"), col("actTo").as("act_to"))
-        .agg(count(lit(1)).as("n"))
-      val rows = res.collect()
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      // bounded: one row per distinct activity pair
+      gate.collect("dfg_parity", StreamingDfg.edges(s, events, gapSeconds = 60),
+          flush = Some(() => ParityFeed.sentinel(s, feed, "_sentinel", "y",
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.groupBy(col("actFrom").as("act_from"), col("actTo").as("act_to"))
+          .agg(count(lit(1)).as("n"))
+      }
       }
       }
     },
@@ -153,7 +136,7 @@ object XesQueries {
     // the file-stream source: per-file StAX parse with the size guard,
     // 5 files per trigger ⇒ 3 micro-batches — still genuine
     // multi-batch arrival; each extra micro-batch costs ~0.3 s of
-    // pure FileStreamSource machinery (measured, ProbeXesStream) and
+    // pure FileStreamSource machinery (measured) and
     // the deep multi-batch coverage lives in StreamScaleBench's xes
     // row at 130/1300 files), and the per-trace event counts + ORDERED activity
     // sequence fingerprints (md5 — computable by both Spark and
@@ -162,7 +145,7 @@ object XesQueries {
     // The parse is stateless, so no watermark state exists to drop
     // rows; LateDrops still asserts the zero.
     "q_stream_xes_parity" -> { (s, _) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import java.nio.file.{Files, Paths, StandardCopyOption}
       import scala.jdk.CollectionConverters._
       val drop = Files.createTempDirectory("xes_stream_drop")
@@ -173,22 +156,16 @@ object XesQueries {
             StandardCopyOption.REPLACE_EXISTING))
         val events = XesReader.readEventsStream(s, drop.toString,
           maxFilesPerTrigger = Some(5))
-        val name = s"stream_xes_parity_${parityRun.incrementAndGet()}"
-        val q = events.writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append()).start()
-        try q.processAllAvailable() finally q.stop()
-        graft.streaming.LateDrops.assertNone(q, name)
         val seqActs = transform(
           array_sort(collect_list(struct(col("seq"), col("activity")))),
           x => x.getField("activity"))
-        val res = s.table(name).filter(col("traceIdx").isNotNull)
-          .groupBy(col("file"), col("traceIdx").as("trace_idx"))
-          .agg(count(lit(1)).as("n_events"),
-            md5(concat_ws(">", seqActs)).as("seq_md5"))
-        val rows = res.collect() // one row per (file, trace): corpus-bounded
-        val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-        s.catalog.dropTempView(name)
-        out
+        // one row per (file, trace): corpus-bounded
+        gate.collect("xes_parity", events) {
+          _.filter(col("traceIdx").isNotNull)
+            .groupBy(col("file"), col("traceIdx").as("trace_idx"))
+            .agg(count(lit(1)).as("n_events"),
+              md5(concat_ws(">", seqActs)).as("seq_md5"))
+        }
       } finally {
         listDir(drop).foreach(Files.delete)
         Files.delete(drop)
@@ -228,7 +205,7 @@ object XesQueries {
     // missing 0 / remaining 0 per trace; the streaming run must
     // reproduce it trace by trace.
     "q_stream_conformance_parity" -> { (s, _) =>
-      ParityFeed.withStreamParallelism(s, 8) {
+      ParityGate(s) { gate =>
       import s.implicits._
       val l1 = XesReader.read(s, s"$book/L1.xes").eventsDf.cache()
       val (net, src) = try {
@@ -244,32 +221,19 @@ object XesQueries {
         .withColumn("ts", timestamp_micros(col("tsMicros")))
         .withWatermark("ts", "10 seconds")
         .as[TraceAssembly.InEvent]
-      val name = s"stream_conf_parity_${parityRun.incrementAndGet()}"
-      val q = graft.streaming.StreamingConformance
-        .replayFitness(s, events, gapSeconds = 60, net)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try {
-        q.processAllAvailable()
-        ParityFeed.sentinel(s, feed, "_sentinel", "y",
-          maxTs + 2L * 86400L * 1000000L)
-        q.processAllAvailable()
-      } finally q.stop()
-      graft.streaming.LateDrops.assertNone(q, name)
-      val res = s.table(name)
-        .filter(col("caseId") =!= "_sentinel")
-        .select(col("caseId").as("case_id"), col("nEvents").as("n_events"),
-          col("fitness"), col("missing"), col("remaining"))
-      val rows = res.collect() // one row per L1 trace (6)
-      val out = s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      s.catalog.dropTempView(name)
-      out
+      // one row per L1 trace (6)
+      gate.collect("conf_parity", graft.streaming.StreamingConformance
+            .replayFitness(s, events, gapSeconds = 60, net),
+          flush = Some(() => ParityFeed.sentinel(s, feed, "_sentinel", "y",
+            maxTs + 2L * 86400L * 1000000L))) {
+        _.filter(col("caseId") =!= "_sentinel")
+          .select(col("caseId").as("case_id"), col("nEvents").as("n_events"),
+            col("fitness"), col("missing"), col("remaining"))
+      }
       }
       }
     }
   )
-
-  private val parityRun = new AtomicInteger(0)
 
   /** Materialized directory listing — Files.list returns a Stream
     * backed by an open DirectoryStream that must be CLOSED, or each

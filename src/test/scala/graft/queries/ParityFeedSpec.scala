@@ -93,15 +93,40 @@ class ParityFeedSpec extends SparkSpec {
     assert(dirB != dir1)
   }
 
-  test("withFeed cleans up its drop-dir; withFeedDoubled stages the doubled multiset") {
+  test("withFeed cleans up its drop-dir") {
     val dir = ParityFeed.withFeed(spark, srcDf(10)) { (feed, _) => feed.dir }
     assert(!new java.io.File(dir).exists(), s"feed dir $dir survived the bracket")
-    ParityFeed.withFeedDoubled(spark, srcDf(10)) { (feed, maxTs) =>
-      assert(maxTs == 10L * 1000000L)
-      val rows = ParityFeed.replay(spark, feed)
-      assert(rows.count() == 20L)
-      // every id appears exactly twice — union(df, df), not 2x rounding
-      assert(rows.groupBy("id").count().where(col("count") =!= 2L).count() == 0L)
+  }
+
+  test("withSharedFeed refuses to re-enter a key that is in use") {
+    val k = s"spec-reentry:${System.identityHashCode(this)}"
+    val e = intercept[IllegalStateException] {
+      ParityFeed.withSharedFeed(spark, k, srcDf(5)) { (_, _) =>
+        ParityFeed.withSharedFeed(spark, k, srcDf(5)) { (_, _) => () }
+      }
     }
+    assert(e.getMessage.contains(k))
+    // the refused inner entry leaves the outer bracket's release intact
+    ParityFeed.withSharedFeed(spark, k, srcDf(5)) { (_, _) => () }
+  }
+
+  test("withSharedFeed deletes only its own sentinel slices, .crc included") {
+    val k = s"spec-own:${System.identityHashCode(this)}"
+    val (dir, own) = ParityFeed.withSharedFeed(spark, k, srcDf(5)) { (feed, maxTs) =>
+      val before = new java.io.File(feed.dir).list().toSet
+      ParityFeed.sentinel(spark, feed, -1L, "_s", maxTs + 86400000000L)
+      // a file this bracket did not write must survive its cleanup
+      java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(feed.dir, "_foreign"))
+      (feed.dir, new java.io.File(feed.dir).list().toSet -- before - "_foreign")
+    }
+    // the published slice and its checksum sidecar; no hidden
+    // in-progress name remains
+    assert(own.count(_.startsWith("sentinel-")) == 1, own)
+    assert(own.count(n => n.startsWith(".sentinel-") && n.endsWith(".crc")) == 1, own)
+    assert(own.size == 2, own)
+    val after = new java.io.File(dir).list().toSet
+    assert((own & after).isEmpty, s"own sentinel files survived: ${own & after}")
+    assert(after.contains("_foreign"))
   }
 }
